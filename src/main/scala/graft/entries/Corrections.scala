@@ -60,8 +60,9 @@ object Corrections {
     if (s == null) null
     else graft.functions.Text.normalizeAgencyName(s, real.aliasGroups))
 
-  /** Broadcastable real date-patch overlay (fixture twin:
-    * Normalize.correctionsDf). */
+  /** The real date-patch table as a frame (fixture twin:
+    * Normalize.correctionsDf); the overlay itself inlines the table
+    * through Normalize.correctedRequest / correctedCompletion. */
   def correctionsDf(spark: SparkSession): DataFrame = {
     import spark.implicits._
     real.dateCorrections.toDF("id", "req_fix", "comp_fix")

@@ -38,11 +38,6 @@ object Engine {
     q.toLowerCase.split("\\s+").toSeq
       .map(_.replaceAll("[^a-z0-9]", "")).filter(_.nonEmpty).distinct
 
-  /** Corrected-date columns — single-sourced in Normalize (the
-    * Warehouse writes the same view). */
-  private def withCorrected(spark: SparkSession, entries: DataFrame): DataFrame =
-    Normalize.withCorrectedDates(spark, entries)
-
   /** Sort dispatch (utils.ts:3-9, entries.ts:65-85). SQLite treats NULL
     * as smallest (first under ASC, last under DESC); id is the unique
     * tiebreak the reference gets implicitly from its rowid scan. */
@@ -83,7 +78,9 @@ object Engine {
   def listEntriesFiltered(spark: SparkSession, entries: DataFrame,
                           opts: SearchOptions,
                           ftsIndexPath: Option[String] = None): DataFrame = {
-    var df = withCorrected(spark, entries)
+    // Corrected-date columns — single-sourced in Normalize (the
+    // Warehouse writes the same view).
+    var df = Normalize.withCorrectedDates(entries)
 
     // P6/J1 — FTS prefix-AND semi-join: maintained index when wired,
     // per-call rebuild otherwise
@@ -119,13 +116,11 @@ object Engine {
     * shape; [[listEntries]] materializes it. Arbitrary-depth consumers
     * should use [[listEntriesAfter]], whose keyed cursor skips the offset
     * scan too. */
-  def pageSlice(spark: SparkSession, filtered: DataFrame,
-                opts: SearchOptions, page: Int): DataFrame = {
+  def pageSlice(filtered: DataFrame, opts: SearchOptions, page: Int): DataFrame = {
     val slice = filtered.orderBy(sortKeys(opts.sort): _*)
       .offset((page - 1) * opts.pageSize).limit(opts.pageSize)
     // P9 — row post-processor on the returned page only
-    Normalize.normalizeEntries(spark,
-      slice.drop("corrected_request", "corrected_completion"))
+    Normalize.normalizeEntries(slice.drop("corrected_request", "corrected_completion"))
   }
 
   /** The page materializes on the driver, so pageSize is a driver-memory
@@ -145,7 +140,7 @@ object Engine {
       val total = df.count()
       val totalPages = math.max(math.ceil(total / opts.pageSize.toDouble).toInt, 1)
       val page = math.min(math.max(opts.page, 1), totalPages)
-      val rows = pageSlice(spark, df, opts, page)
+      val rows = pageSlice(df, opts, page)
       // Materialize the bounded page (<= pageSize rows) so the cached
       // filtered frame is released before returning — every ListPage field
       // is already eager (count), and callers that only consume `rows`
@@ -195,8 +190,7 @@ object Engine {
     }
     val page = base.where(after)
       .orderBy(sortKeys(opts.sort): _*).limit(opts.pageSize)
-    Normalize.normalizeEntries(spark,
-      page.drop("corrected_request", "corrected_completion"))
+    Normalize.normalizeEntries(page.drop("corrected_request", "corrected_completion"))
   }
 
   /** distinctResolutions (entries.ts:180-187). */

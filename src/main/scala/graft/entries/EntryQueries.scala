@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 import graft.functions.{Cols, Text}
 import graft.util.SqlLit
 
@@ -23,6 +24,8 @@ object Normalize {
   val agencyTitleUdf = udf((s: String) =>
     if (s == null) null else Text.agencyIdentity(s, aliasGroups)._1)
 
+  /** The correction tables as frames, for callers that read them as
+    * data; the overlay itself inlines them through [[overlay]]. */
   def correctionsDf(spark: SparkSession): DataFrame = {
     import spark.implicits._
     dateCorrections.toDF("id", "req_fix", "comp_fix")
@@ -33,34 +36,49 @@ object Normalize {
     orgCorrections.toDF("org_from", "org_to")
   }
 
-  /** P9 — normalizeEntry as one shared view-level transform (broadcast
-    * joins + coalesce; the apostrophe cleanup and canonicalization are
-    * the UDF surface). Applied once in the view, not per query. */
-  def normalizeEntries(spark: SparkSession, df: DataFrame): DataFrame = {
-    val cleaned = regexp_replace(col("agency"), "'{2,}", "'")
-    df
-      .join(broadcast(correctionsDf(spark)), Seq("id"), "left")
-      .withColumn("request_date", coalesce(col("req_fix"), col("request_date")))
-      .withColumn("completion_date", coalesce(col("comp_fix"), col("completion_date")))
-      .drop("req_fix", "comp_fix")
-      .join(broadcast(orgCorrectionsDf(spark)),
-        col("organization") === col("org_from"), "left")
-      .withColumn("organization", coalesce(col("org_to"), col("organization")))
-      .drop("org_from", "org_to")
-      .withColumn("agency", agencyNameUdf(cleaned))
-  }
+  /** The one corrections overlay: `c` patched by a correction table
+    * looked up on `key` (applyCorrections / correctedDateExpr,
+    * src/lib/corrections.ts:70-88, src/lib/db/shared.ts:55-66). The table
+    * is inlined as a literal map under `coalesce`, the analog of the
+    * reference's generated CASE. A join against the same table held on
+    * the driver plans a BroadcastExchange, which costs one Spark job per
+    * query; the literal costs none. The lookup scans the map linearly,
+    * which suits tables of tens of rows (ENGINE.md). An empty table
+    * leaves `c` as it is. */
+  def overlay[K: TypeTag](table: Seq[(K, String)], key: Column, c: Column): Column =
+    if (table.isEmpty) c else coalesce(try_element_at(typedLit(table.toMap), key), c)
+
+  /** request_date under a per-id date-patch table. */
+  def correctedRequest(patches: Seq[(Long, Option[String], Option[String])] = dateCorrections): Column =
+    overlay(patches.flatMap(p => p._2.map(p._1 -> _)), col("id"), col("request_date"))
+
+  /** completion_date under a per-id date-patch table. */
+  def correctedCompletion(patches: Seq[(Long, Option[String], Option[String])] = dateCorrections): Column =
+    overlay(patches.flatMap(p => p._3.map(p._1 -> _)), col("id"), col("completion_date"))
+
+  /** The date patches and organization remap, applied in place. */
+  def withCorrections(df: DataFrame): DataFrame =
+    df.withColumn("request_date", correctedRequest())
+      .withColumn("completion_date", correctedCompletion())
+      .withColumn("organization", overlay(orgCorrections, col("organization"), col("organization")))
+
+  /** P9 — normalizeEntry as one shared view-level transform: the
+    * corrections overlay plus the apostrophe cleanup and canonical
+    * agency name (the UDF surface). Applied once in the view, not per
+    * query. */
+  def normalizeEntries(df: DataFrame): DataFrame =
+    withCorrections(df)
+      .withColumn("agency", agencyNameUdf(regexp_replace(col("agency"), "'{2,}", "'")))
 
   /** Corrected-date columns for filter/sort (correctedDateExpr,
-    * src/lib/db/shared.ts:55-66) — broadcast overlay + coalesce. The
-    * single source of the corrected view: the Engine filter pipeline
-    * and the partitioned Warehouse both read THIS, so the overlay
-    * semantics cannot drift between the two paths. */
-  def withCorrectedDates(spark: SparkSession, entries: DataFrame): DataFrame =
+    * src/lib/db/shared.ts:55-66). The single source of the corrected
+    * view: the Engine filter pipeline and the partitioned Warehouse both
+    * read THIS, so the overlay semantics cannot drift between the two
+    * paths. */
+  def withCorrectedDates(entries: DataFrame): DataFrame =
     entries
-      .join(broadcast(correctionsDf(spark)), Seq("id"), "left")
-      .withColumn("corrected_request", coalesce(col("req_fix"), col("request_date")))
-      .withColumn("corrected_completion", coalesce(col("comp_fix"), col("completion_date")))
-      .drop("req_fix", "comp_fix")
+      .withColumn("corrected_request", correctedRequest())
+      .withColumn("corrected_completion", correctedCompletion())
 
   /** Canonical (name, slug) identity columns (agencyIdentity,
     * src/lib/db/shared.ts:14-19), on the apostrophe-cleaned raw agency. */
@@ -195,16 +213,7 @@ object EntryQueries extends graft.QueryModule {
       // The projection reports identity.name as the canonical agency so
       // the oracle's VALUES identity map applies; normalizeEntries'
       // normalizeAgencyName output itself is pinned by ScalaTest goldens.
-      val base = Fixture.df(s)
-      Normalize.withIdentity(
-        base.join(broadcast(Normalize.correctionsDf(s)), Seq("id"), "left")
-          .withColumn("request_date", coalesce(col("req_fix"), col("request_date")))
-          .withColumn("completion_date", coalesce(col("comp_fix"), col("completion_date")))
-          .drop("req_fix", "comp_fix")
-          .join(broadcast(Normalize.orgCorrectionsDf(s)),
-            col("organization") === col("org_from"), "left")
-          .withColumn("organization", coalesce(col("org_to"), col("organization")))
-          .drop("org_from", "org_to"))
+      Normalize.withIdentity(Normalize.withCorrections(Fixture.df(s)))
         .select(col("id"), col("name").as("agency"), col("organization"),
           col("request_date"), col("completion_date"), col("resolution"))
     },
@@ -230,10 +239,7 @@ object EntryQueries extends graft.QueryModule {
          |SELECT id, agency, corrected_request, resolution, total FROM w WHERE rn <= 3""".stripMargin
     }) { (s, d) =>
       val cands = Normalize.aliasCandidates("DEP").map(_.toLowerCase)
-      val base = Fixture.df(s)
-        .join(broadcast(Normalize.correctionsDf(s)), Seq("id"), "left")
-        .withColumn("corrected_request", coalesce(col("req_fix"), col("request_date")))
-      val filtered = base
+      val filtered = Normalize.withCorrectedDates(Fixture.df(s))
         .where(lower(col("agency")).isin(cands: _*) &&
           col("resolution").isin("Granted", "Granted in part") &&
           col("corrected_request") >= "2024-01-01" && col("corrected_request") <= "2025-05-31")
@@ -735,10 +741,10 @@ object EntryQueries extends graft.QueryModule {
     },
 
     // J5b — the REAL per-id date patches (24 entries) applied through the
-    // corrections overlay join. The base frame carries sentinel dates for
-    // exactly the patched ids; the oracle VALUES is the expected coalesce
-    // result copied from the JSON spec, so a dropped or garbled patch
-    // breaks the row hash.
+    // shared corrections overlay (Normalize.overlay). The base frame
+    // carries sentinel dates for exactly the patched ids; the oracle
+    // VALUES is the expected coalesce result copied from the JSON spec,
+    // so a dropped or garbled patch breaks the row hash.
     graft.QueryDef("j5_real_corrections", Some(
       """SELECT * FROM (VALUES
         |  (CAST(52803 AS BIGINT), '1900-01-01', '2025-02-24'),
@@ -770,10 +776,10 @@ object EntryQueries extends graft.QueryModule {
       val base = Corrections.real.dateCorrections.map(_._1).toDF("id")
         .withColumn("request_date", lit("1900-01-01"))
         .withColumn("completion_date", lit("1900-01-01"))
-      base.join(broadcast(Corrections.correctionsDf(s)), Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("req_fix"), col("request_date")).as("request_date"),
-          coalesce(col("comp_fix"), col("completion_date")).as("completion_date"))
+      val patches = Corrections.real.dateCorrections
+      base.select(col("id"),
+        Normalize.correctedRequest(patches).as("request_date"),
+        Normalize.correctedCompletion(patches).as("completion_date"))
     }
   )
 }

@@ -208,7 +208,7 @@ object Sync {
   /** S1 at scale — the distributed twin of [[runSync]]. The reference's
     * serial fetch loop (one page per round-trip, sync.ts:177-212) can't
     * saturate a cluster; here each round probes a WINDOW of `batch`
-    * candidate ids from `ids.toDS.mapPartitions(transport+parse)` so the
+    * candidate ids from `spark.range(...).mapPartitions(transport+parse)` so the
     * fetch+parse fan out across executors, and only the drift-stop
     * decision runs on the driver over the parsed batch — bounded by the
     * `batch` tunable (256 rows), NOT by corpus size, so the driver never
@@ -238,10 +238,10 @@ object Sync {
     var rounds = 0
     while (stopId < 0 && rounds < maxBatches) {
       rounds += 1
-      val ids: Seq[Long] = batchStart until (batchStart + batch)
       // Fan the fetch+parse out across executors; the collected batch is
-      // <= `batch` rows — bounded driver data by construction.
-      val parsed = spark.createDataset(ids).repartition(math.min(batch, 32))
+      // <= `batch` rows — bounded driver data by construction. The range
+      // is born with its partitions, so the fan-out needs no shuffle.
+      val parsed = spark.range(batchStart, batchStart + batch, 1, math.min(batch, 32)).as[Long]
         .mapPartitions(_.flatMap(id => transport(id).flatMap(parseEntry(_, id))))
         .collect()
       val byId = parsed.map(e => e.id -> e).toMap

@@ -27,7 +27,7 @@ object Warehouse {
     * Streams.warehouseAppendStream). A second copy of the year parse
     * would let the two stores partition differently and mis-prune. */
   def correctedPartitioned(spark: SparkSession, entries: DataFrame): DataFrame =
-    Normalize.withCorrectedDates(spark, entries)
+    Normalize.withCorrectedDates(entries)
       .withColumn("request_year",
         substring(col("corrected_request"), 1, 4).cast(IntegerType))
 

@@ -55,6 +55,9 @@ object ResultCache {
     * computes into a temp directory, renames it over the entry, then
     * advances the bookmark — so a concurrent reader sees either the old
     * complete artifact or the new one, never a half-written directory.
+    * The old bookmark is removed before the old data, and a failed
+    * rename throws before the new bookmark is written, so a refresh that
+    * dies part-way leaves an entry that the next call recomputes.
     * (Writer-vs-writer races assume the scheduler runs one refresher per
     * key, as the reference's cron does; a lake table format is the
     * answer when that doesn't hold.) */
@@ -72,8 +75,10 @@ object ResultCache {
       val f = fsOf(spark, dataPath)
       f.delete(tmpPath, true)
       compute.write.mode("overwrite").parquet(tmpPath.toString)
+      f.delete(bookmarkPath, false)
       f.delete(dataPath, true)
-      f.rename(tmpPath, dataPath)
+      if (!f.rename(tmpPath, dataPath))
+        throw new java.io.IOException(s"result cache: could not rename $tmpPath to $dataPath")
       val out = f.create(bookmarkPath, true)
       try out.write(bookmark.getBytes(StandardCharsets.UTF_8))
       finally out.close()

@@ -800,7 +800,8 @@ object Streams {
   /** Streaming feed of the partitioned entries warehouse: each
     * micro-batch applies the shared corrections overlay
     * (Normalize.withCorrectedDates — the same single source the batch
-    * Warehouse writes) and lands partitioned by (batch_id,
+    * Warehouse writes; literal lookups, so the overlay adds no job to
+    * the micro-batch) and lands partitioned by (batch_id,
     * request_year) with DYNAMIC partition overwrite: a retried batch
     * replaces exactly its own (batch, year) partitions — idempotent —
     * while other batches' data is untouched — append-safe. Readers

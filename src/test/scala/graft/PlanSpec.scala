@@ -209,7 +209,7 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // listEntries itself returns a materialized page (so it can release its
     // cache eagerly); audit the lazy slice plan it materializes.
     val opts = SearchOptions(sort = "newest", page = 2, pageSize = 5)
-    val slice = Engine.pageSlice(spark,
+    val slice = Engine.pageSlice(
       Engine.listEntriesFiltered(spark, Fixture.df(spark), opts), opts, 2)
     val p = slice.queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"), "listEntries page: no TakeOrderedAndProject")
@@ -222,6 +222,24 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // the registered OFFSET gate query shares the shape
     val o2 = plan("o2_offset_page")
     assert(o2.contains("TakeOrderedAndProject") && !o2.contains("Window"))
+  }
+
+  test("entries pages apply the corrections overlay without a BroadcastExchange") {
+    import graft.entries.{Engine, Fixture, SearchOptions}
+    // The overlay tables are inlined as literals; a join against them
+    // would plan a BroadcastExchange, one extra job on every request.
+    val opts = SearchOptions(sort = "newest", page = 2, pageSize = 5)
+    val slice = Engine.pageSlice(
+      Engine.listEntriesFiltered(spark, Fixture.df(spark), opts), opts, 2)
+    val cur = Engine.listEntriesAfter(spark, Fixture.df(spark),
+      SearchOptions(sort = "newest", pageSize = 5), Some("2025-05-01"), 2L)
+    for ((name, df) <- Seq("pageSlice" -> slice, "listEntriesAfter" -> cur)) {
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("BroadcastExchange"), s"$name: overlay planned as a broadcast:\n$p")
+    }
+    // positive control: the TPC-H corrections join still broadcasts, so
+    // the plan string does show a BroadcastExchange where one exists
+    assert(plan("j5_corrections_join").contains("BroadcastExchange"))
   }
 
   test("pipeline windows are always partitioned (no global-sort Window)") {

@@ -308,15 +308,13 @@ object PropertySpec extends Properties("graft.scalars") {
         served.size == served.distinctBy { case (a, b, _) => (a, b) }.size
     }
 
-  // The same rule evaluated by the ENGINE's Column logic: random pair
-  // rows and winners frames through Dedup.lwwPairFilter itself, so the
-  // Scala mirror above cannot drift from the Spark implementation.
-  // Config MUST mirror SparkSuite's builder exactly: suites share one
-  // JVM and getOrCreate returns whichever session was built first, so
-  // a drifting config here (e.g. the default ./spark-warehouse instead
-  // of the tmp dir) would silently reconfigure every catalog-using
-  // suite that runs after this object.
-  private lazy val lwwSpark: org.apache.spark.sql.SparkSession =
+  // The session of the Spark-backed properties below. Config MUST
+  // mirror SparkSuite's builder exactly: suites share one JVM and
+  // getOrCreate returns whichever session was built first, so a
+  // drifting config here (e.g. the default ./spark-warehouse instead of
+  // the tmp dir) would silently reconfigure every catalog-using suite
+  // that runs after this object.
+  private lazy val session: org.apache.spark.sql.SparkSession =
     org.apache.spark.sql.SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -327,6 +325,9 @@ object PropertySpec extends Properties("graft.scalars") {
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
 
+  // The same rule evaluated by the ENGINE's Column logic: random pair
+  // rows and winners frames through Dedup.lwwPairFilter itself, so the
+  // Scala mirror above cannot drift from the Spark implementation.
   private val lwwStoreGen: Gen[(List[(Int, Int)], List[(Int, Int, Int)])] =
     for {
       nIds <- Gen.chooseNum(2, 6)
@@ -343,7 +344,7 @@ object PropertySpec extends Properties("graft.scalars") {
 
   property("d34c: Dedup.lwwPairFilter (Spark) == the LWW rule, any store") =
     Prop.forAll(lwwStoreGen) { case (winners, pairs) =>
-      val s = lwwSpark
+      val s = session
       import s.implicits._
       val pairsDf = pairs.map { case (a, b, bid) => (a.toLong, b.toLong, 1.0, bid.toLong) }
         .toDF("doc_a", "doc_b", "jaccard", "batch_id")
@@ -359,6 +360,56 @@ object PropertySpec extends Properties("graft.scalars") {
           bid >= lastM(a) && bid >= lastM(b) }
         .map { case (a, b, bid) => (a.toLong, b.toLong, bid.toLong) }.sorted
       got == want
+    }
+
+  // Entries frames for the corrections overlay: ids patched on the
+  // request date only, the completion date only or both (fixture and
+  // real tables), unpatched ids, duplicates (a small id pool), and
+  // null, empty, remapped and unmapped organizations.
+  private val overlayIds: Seq[Long] =
+    Seq(3L, 12L, 17L, 52803L, 22952L, 14388L, 1L, 2L, 99L, 100000L)
+  private val overlayRowsGen: Gen[List[(Long, Option[String], Option[String], Option[String])]] = {
+    val date = Gen.option(Gen.chooseNum(1, 28).map(d => f"2024-03-$d%02d"))
+    Gen.listOf(for {
+      id <- Gen.oneOf(overlayIds)
+      org <- Gen.option(Gen.oneOf("ACLU-WV", "ACLU of West Virginia", "Other Org", ""))
+      req <- date
+      comp <- date
+    } yield (id, org, req, comp))
+  }
+
+  property("corrections overlay == a left join on the table, for the fixture, real and empty tables") =
+    Prop.forAll(overlayRowsGen) { rows =>
+      val s = session
+      import s.implicits._
+      import org.apache.spark.sql.functions.{coalesce, col}
+      import graft.entries.{Corrections, Normalize}
+      val real = Corrections.real.dateCorrections
+      val empty = Corrections.parse("""{"agencies": {"X": ["Y"]}}""").dateCorrections
+      val base = rows.zipWithIndex.map { case ((id, org, req, comp), i) => (id, org, req, comp, i) }
+        .toDF("id", "organization", "request_date", "completion_date", "row")
+      val inlined = Normalize.withCorrections(base
+          .withColumn("real_req", Normalize.correctedRequest(real))
+          .withColumn("real_comp", Normalize.correctedCompletion(real))
+          .withColumn("empty_req", Normalize.correctedRequest(empty))
+          .withColumn("empty_comp", Normalize.correctedCompletion(empty)))
+      val joined = base
+        .join(Normalize.correctionsDf(s), Seq("id"), "left")
+        .join(Normalize.orgCorrectionsDf(s), col("organization") === col("org_from"), "left")
+        .join(Corrections.correctionsDf(s).toDF("id", "real_req_fix", "real_comp_fix"), Seq("id"), "left")
+        .select(col("id"),
+          coalesce(col("org_to"), col("organization")).as("organization"),
+          coalesce(col("req_fix"), col("request_date")).as("request_date"),
+          coalesce(col("comp_fix"), col("completion_date")).as("completion_date"),
+          col("row"),
+          coalesce(col("real_req_fix"), col("request_date")).as("real_req"),
+          coalesce(col("real_comp_fix"), col("completion_date")).as("real_comp"),
+          col("request_date").as("empty_req"), col("completion_date").as("empty_comp"))
+      def sorted(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("row").collect().map(_.toSeq).toSeq
+      // in place: same columns in the same order and of the same types
+      inlined.schema.take(5) == base.schema &&
+        inlined.schema == joined.schema && sorted(inlined) == sorted(joined)
     }
 
   property("slug re-aggregation preserves totals") =

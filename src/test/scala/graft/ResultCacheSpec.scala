@@ -47,4 +47,44 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
       Seq("window" -> "30d"), "bm-2")(compute())
     assert(!hit4 && computes == 3)
   }
+
+  test("a failed rename raises before the bookmark moves; the next call recomputes") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failrename.impl", classOf[FailingRenameFs].getName)
+    conf.setBoolean("fs.failrename.impl.disable.cache", true)
+    val dir = "failrename://" + tmp()
+    var computes = 0
+    def compute() = { computes += 1; spark.range(5).toDF("n") }
+    val params = Seq("k" -> "v")
+    ResultCache.withCache(spark, dir, "scope", params, "bm-1")(compute())
+    FailingRenameFs.failing = true
+    try {
+      intercept[java.io.IOException] {
+        ResultCache.withCache(spark, dir, "scope", params, "bm-2")(compute())
+      }
+    } finally FailingRenameFs.failing = false
+    assert(computes == 2)
+    // neither the old nor the new bookmark may replay the deleted data
+    for (bm <- Seq("bm-2", "bm-1")) {
+      val before = computes
+      val (r, hit) = ResultCache.withCache(spark, dir, "scope", params, bm)(compute())
+      assert(!hit && computes == before + 1, s"$bm replayed a missing entry")
+      assert(r.count() == 5L)
+    }
+  }
+}
+
+/** Local filesystem under its own scheme whose rename of a result-cache
+  * temp dir reports failure (returns false, moves nothing) while
+  * [[FailingRenameFs.failing]] is set; every other rename succeeds, so
+  * Spark's own output commit still works. */
+class FailingRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failrename:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    if (FailingRenameFs.failing && src.getName == ".data.tmp") false
+    else super.rename(src, dst)
+}
+
+object FailingRenameFs {
+  @volatile var failing = false
 }

@@ -887,7 +887,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // every fixture row lands exactly once, with the overlay applied
     assert(got.count() == all.size.toLong)
     val batchExpect = graft.entries.Normalize.withCorrectedDates(
-      spark, graft.entries.Fixture.df(spark))
+      graft.entries.Fixture.df(spark))
     val gotCorr = got.select("id", "corrected_request").as[(Long, Option[String])]
       .collect().toMap
     val wantCorr = batchExpect.select("id", "corrected_request")

@@ -37,9 +37,9 @@ class TestInventorySpec extends AnyFunSuite {
     "InferenceSpec" -> 4,
     "NativeExprSpec" -> 10,
     "PipelineSpec" -> 73,
-    "PlanSpec" -> 44,
+    "PlanSpec" -> 45,
     "RebalanceSpec" -> 4,
-    "ResultCacheSpec" -> 2,
+    "ResultCacheSpec" -> 3,
     "ScaleOpsSpec" -> 7,
     "SchemaEvolutionSpec" -> 5,
     "StreamingSpec" -> 33,
@@ -47,7 +47,7 @@ class TestInventorySpec extends AnyFunSuite {
     "TextSpec" -> 11,
     "ToolsSpec" -> 8)
 
-  private val propertyPin = 18 // PropertySpec (ScalaCheck Properties)
+  private val propertyPin = 19 // PropertySpec (ScalaCheck Properties)
 
   private def specFiles: Seq[String] = {
     val dir = new java.io.File("src/test/scala/graft")
